@@ -36,33 +36,7 @@ from pyspark.sql import functions as F
 
 from cloudbrush_spark.functions import dna
 from cloudbrush_spark.operators.graph import compressible
-from cloudbrush_spark.plans.sever import sever_origin
-
-
-def _cut(df: DataFrame) -> DataFrame:
-    """Round boundary: localCheckpoint + ORIGIN-PLAN SEVERING.
-
-    ``localCheckpoint`` truncates the visible lineage, but the returned
-    LogicalRDD retains the pre-checkpoint logical plan (origin stats /
-    constraints), and that reference CHAINS across rounds: round r's
-    origin plan contains round r-1's LogicalRDD, whose origin contains
-    r-2's, ...  Catalyst passes that re-walk the plan per round —
-    stats estimation (``SizeInBytesOnlyStatsPlanVisitor.visitJoin``),
-    InjectRuntimeFilter, constant folding — then run over an
-    ever-deepening join tree, and per-round DRIVER time grows
-    geometrically even though the data shrinks: measured on a 600k-node
-    chain, rounds 10/11/12 cost 1.8s/3.5s/11.9s with plain
-    localCheckpoint and 1.3s flat with this cut (a 1.5M-node chain's
-    round 14 cost 345s before the fix).  Severing rebuilds the frame
-    from the materialized internal RDD (zero-copy — ``toRdd`` on a
-    checkpointed frame IS the checkpoint RDD), so no Catalyst walk can
-    recurse into history.  The severed frame has no origin stats, which
-    suppresses static broadcast planning downstream — inside the loop
-    every join is either hinted or AQE-converted from actual runtime
-    sizes, so plans are unchanged (and measured faster end-to-end).
-    Severing mechanics + the fail-loud Connect fallback live in
-    ``plans.sever_origin``."""
-    return sever_origin(df.localCheckpoint(eager=True))
+from cloudbrush_spark.plans.sever import cut, observed_cut
 
 
 def D1():
@@ -252,7 +226,7 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
 
     member_df = spark.createDataFrame([(m,) for m in members], "node_id string")
     attrs = {row.node_id: row for row in
-             nodes.join(member_df, "node_id").collect()}
+             nodes.join(F.broadcast(member_df), "node_id").collect()}
 
     def free_side(n: str, side: str) -> bool:
         return (n, side) not in out
@@ -374,10 +348,16 @@ def _serial_contract(nodes: DataFrame, edges: DataFrame,
 
 
 def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
-                    max_rounds: int = 64, checkpoint_every: int = 1,
-                    serial_threshold: int = 4096, coin: str = "xxhash64",
+                    max_rounds: int = 64, serial_threshold: int = 4096,
+                    coin: str = "xxhash64",
                     verbose: bool = False) -> tuple[DataFrame, DataFrame, int]:
     """Contract all compressible chains to single nodes.
+
+    Materialized frames in, materialized frames out: every round reads
+    ``nodes``/``edges`` several times, so pass checkpointed frames (a
+    lazy input re-runs its whole plan per read); every graph this builds
+    is cut before it is read again or returned.  Link and merge counts
+    ride their cut (``plans.observed_cut``).
 
     Randomized pairwise rounds (G5/G6) while the link set is large; once it
     drops to ``serial_threshold`` the residual subgraph is contracted in
@@ -392,30 +372,24 @@ def contract_chains(nodes: DataFrame, edges: DataFrame, seed: int = 42,
     rounds = 0
     for rnd in range(max_rounds):
         t0 = time.time()
-        links = _cut(compressible(nodes, edges))
-        n_links = links.count()
+        links, n_links = observed_cut(compressible(nodes, edges))
         if n_links == 0:
             break
         if n_links <= serial_threshold:
             nodes, edges = _serial_contract(nodes, edges, links.collect())
-            nodes = nodes.localCheckpoint(eager=True)
-            edges = edges.localCheckpoint(eager=True)
+            nodes, edges = cut(nodes), cut(edges)
             rounds += 1
             if verbose:
                 print(f"contract serial finish: {n_links} links "
                       f"({time.time() - t0:.1f}s)", flush=True)
             break
-        merges = _cut(_pick_merges(links, seed + rnd, coin))
-        n_merges = merges.count()
+        merges, n_merges = observed_cut(_pick_merges(links, seed + rnd, coin))
         if n_merges == 0:
             # all-same-coin pathology on a residual chain: next seed reshuffles
             rounds += 1
             continue
-        nodes = _merge_nodes(nodes, merges)
-        edges = _rewrite_edges(edges, merges)
-        if (rnd + 1) % checkpoint_every == 0:
-            nodes = _cut(nodes)
-            edges = _cut(edges)
+        nodes = cut(_merge_nodes(nodes, merges))
+        edges = cut(_rewrite_edges(edges, merges))
         rounds += 1
         if verbose:
             print(f"contract round {rnd}: {n_merges} merges "

@@ -47,7 +47,7 @@ def _stage_cut(df: DataFrame, sever: bool = False) -> DataFrame:
     deepening tree each round — per-round driver time grows
     geometrically while data shrinks (measured in the contraction loop:
     345 s for a late round whose data was ~1,000 rows; see
-    ``operators/contraction._cut``).  Use sever=True for the per-round
+    ``plans.sever.cut``).  Use sever=True for the per-round
     cut of any unbounded loop; leave it off for one-shot cuts, where the
     origin stats help downstream static broadcast planning."""
     sc = df.sparkSession.sparkContext

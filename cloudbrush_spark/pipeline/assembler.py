@@ -3,9 +3,12 @@
 DataFrame actions.
 
 Stage boundaries ``localCheckpoint`` to truncate lineage (replacing the
-reference's HDFS directory renames); loop decisions read counts
-(replacing Hadoop counters).  Every stage returns/records its counters in
-``self.counters`` mirroring the reference's per-stage printouts.
+reference's HDFS directory renames).  Loop decisions read counts that
+ride the materializing job (``plans.observed_cut``, an ``Observation``
+on the checkpoint — the reference's Hadoop counters), so each decision
+frame is computed once: never ``count()`` a lazy frame and then build on
+it.  Every stage returns/records its counters in ``self.counters``
+mirroring the reference's per-stage printouts.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from cloudbrush_spark.operators import bubbles as bubbles_ops
 from cloudbrush_spark.operators import consensus as consensus_ops
 from cloudbrush_spark.operators import contraction, dedup, graph, kmers, mates, overlap
 from cloudbrush_spark.operators import stats as stats_ops
+from cloudbrush_spark.plans import observed_cut
 
 
 @dataclass
@@ -69,8 +73,7 @@ class Assembler:
         p = self.params
         if p.precorrect:  # CloudRS-style correction (README.md:21-23)
             for _ in range(p.precorrect_rounds):
-                fixes = consensus_ops.precorrect(reads)
-                n_fixes = fixes.count()
+                fixes, n_fixes = observed_cut(consensus_ops.precorrect(reads))
                 self.counters["precorrect_fixes"] = \
                     self.counters.get("precorrect_fixes", 0) + n_fixes
                 if n_fixes == 0:
@@ -84,15 +87,13 @@ class Assembler:
             # coverage a true k-mer is seen tens of times, so these are the
             # reads whose merge-through causes the residual base error.
             tr = kmers.trusted_reads(reads, p.k, p.trust_threshold)
-            reads = self._ckpt(
+            reads, self.counters["trusted_reads"] = observed_cut(
                 reads.join(tr.filter("trusted"), on="read_id", how="left_semi"))
-            self.counters["trusted_reads"] = reads.count()
             self._log(f"trust_filter: kept {self.counters['trusted_reads']} trusted reads")
-        nodes = self._ckpt(dedup.dedup_reads(reads, k=p.k))
-        self.counters["nodes"] = nodes.count()
-        hk = self._ckpt(kmers.high_kmers(
+        nodes, self.counters["nodes"] = observed_cut(
+            dedup.dedup_reads(reads, k=p.k))
+        hk, self.counters["high_kmers"] = observed_cut(kmers.high_kmers(
             nodes, p.k, up_kmer=p.up_kmer, id_col="node_id", cov_col="cov"))
-        self.counters["high_kmers"] = hk.count()
         self._log(f"preprocess: {self.counters['nodes']} nodes, "
                   f"{self.counters['high_kmers']} high kmers")
         return nodes, hk
@@ -100,9 +101,8 @@ class Assembler:
     # -- buildOverlap: J1 -> J2 -> J3 (BrushAssembler.java:313-333) --------
     def build_overlap(self, nodes: DataFrame, high_kmers: DataFrame) -> DataFrame:
         p = self.params
-        edges = self._ckpt(overlap.build_overlap_graph(
+        edges, self.counters["edges"] = observed_cut(overlap.build_overlap_graph(
             nodes, p.k, high_kmers, per_key_cap=p.up_kmer))
-        self.counters["edges"] = edges.count()
         self._log(f"build_overlap: {self.counters['edges']} edges")
         return edges
 
@@ -111,15 +111,14 @@ class Assembler:
                            ) -> tuple[DataFrame, DataFrame]:
         p = self.params
         for rnd in range(2):  # loop <= 2 rounds (BrushAssembler.java:347-367)
-            cuts = consensus_ops.cut_chimeric_links(
-                nodes, edges, p.majority, p.pwm_n)
-            n_cut = cuts.count()
+            cuts, n_cut = observed_cut(consensus_ops.cut_chimeric_links(
+                nodes, edges, p.majority, p.pwm_n))
             self.counters[f"chimeric_cut_r{rnd}"] = n_cut
             if n_cut == 0:
                 break
             edges = self._ckpt(graph.remove_edges(edges, cuts))
-        edges = self._ckpt(graph.transitive_reduction(nodes, edges))
-        self.counters["edges_after_tr"] = edges.count()
+        edges, self.counters["edges_after_tr"] = observed_cut(
+            graph.transitive_reduction(nodes, edges))
         nodes, edges = self.compress_chains(nodes, edges)
         if self.params.diagnostics:
             # G9 DefineConsensus + G10 CountBraid diagnostic counters
@@ -134,13 +133,16 @@ class Assembler:
     # -- compressChains (BrushAssembler.java:468-560) ----------------------
     def compress_chains(self, nodes: DataFrame, edges: DataFrame
                         ) -> tuple[DataFrame, DataFrame]:
+        """Materialized (nodes, edges) in, materialized (nodes, edges)
+        out: callers cut a rewritten graph before contracting it, and
+        ``contract_chains`` cuts every graph it builds."""
         nodes, edges, rounds = contraction.contract_chains(
             nodes, edges, seed=self.params.random_seed,
             serial_threshold=self.params.serial_threshold,
             verbose=self.verbose)
         self.counters["compress_rounds"] = \
             self.counters.get("compress_rounds", 0) + rounds
-        return self._ckpt(nodes), self._ckpt(edges)
+        return nodes, edges
 
     # -- removeTips (BrushAssembler.java:565-618) --------------------------
     def remove_tips(self, nodes: DataFrame, edges: DataFrame
@@ -154,13 +156,12 @@ class Assembler:
         self.counters["tips_island"] = \
             self.counters.get("tips_island", 0) + islands
         while True:
-            doomed = graph.find_tips(nodes, edges, p.tiplength)
-            n = doomed.count()
+            doomed, n = observed_cut(graph.find_tips(nodes, edges, p.tiplength))
             if n == 0:
                 break
             total += n
             nodes, edges = graph.remove_nodes(nodes, edges, doomed)
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self.compress_chains(self._ckpt(nodes), self._ckpt(edges))
         self.counters["tips_removed"] = self.counters.get("tips_removed", 0) + total
         self._log(f"remove_tips: {total} tips removed, {islands} islands")
         return nodes, edges
@@ -171,14 +172,13 @@ class Assembler:
         p = self.params
         total = 0
         while True:
-            pops = bubbles_ops.find_bubbles(
-                nodes, edges, p.maxbubblelen, p.bubble_edit_rate)
-            n = pops.count()
+            pops, n = observed_cut(bubbles_ops.find_bubbles(
+                nodes, edges, p.maxbubblelen, p.bubble_edit_rate))
             if n == 0:
                 break
             total += n
             nodes, edges = bubbles_ops.pop_bubbles(nodes, edges, pops)
-            nodes, edges = self.compress_chains(nodes, edges)
+            nodes, edges = self.compress_chains(self._ckpt(nodes), self._ckpt(edges))
         self.counters["bubbles_popped"] = self.counters.get("bubbles_popped", 0) + total
         self._log(f"pop_all_bubbles: {total} popped")
         return nodes, edges
@@ -187,10 +187,10 @@ class Assembler:
     def remove_low_cov(self, nodes: DataFrame, edges: DataFrame
                        ) -> tuple[DataFrame, DataFrame]:
         p = self.params
-        nodes, edges, doomed = graph.remove_low_coverage(
-            nodes, edges, p.low_cov_thresh, p.max_low_cov_len)
-        self.counters["lowcov_removed"] = doomed.count()
-        nodes, edges = self.compress_chains(nodes, edges)
+        doomed, self.counters["lowcov_removed"] = observed_cut(
+            graph.low_coverage_nodes(nodes, p.low_cov_thresh, p.max_low_cov_len))
+        nodes, edges = graph.remove_nodes(nodes, edges, doomed)
+        nodes, edges = self.compress_chains(self._ckpt(nodes), self._ckpt(edges))
         nodes, edges = self.remove_tips(nodes, edges)
         nodes, edges = self.pop_all_bubbles(nodes, edges)
         self._log(f"remove_low_cov: {self.counters['lowcov_removed']} removed")
@@ -206,8 +206,7 @@ class Assembler:
             uniq = classified.filter(F.col("unique")).select(
                 F.col("node_id").alias("src"))
             boundary = graph.overlap_boundary_cuts(edges.join(uniq, "src"))
-            removals = loops.unionByName(boundary).distinct()
-            n = removals.count()
+            removals, n = observed_cut(loops.unionByName(boundary).distinct())
             self.counters["edge_adjust_cuts"] = \
                 self.counters.get("edge_adjust_cuts", 0) + n
             if n == 0:
@@ -223,10 +222,9 @@ class Assembler:
         p = self.params
         for _ in range(max_rounds):
             counts = stats_ops.global_counts(nodes).collect()[0]
-            removals = mates.adjust_mate_edges(
+            removals, n = observed_cut(mates.adjust_mate_edges(
                 nodes, edges, counts["reads"], counts["ctg_sum"],
-                inslen=p.inslen, inslen_sd=p.inslen_sd)
-            n = removals.count()
+                inslen=p.inslen, inslen_sd=p.inslen_sd))
             self.counters["mate_edge_cuts"] = \
                 self.counters.get("mate_edge_cuts", 0) + n
             if n == 0:

@@ -1,3 +1,6 @@
+import pathlib
+import warnings
+
 import pytest
 
 # Long-running property/e2e/lifecycle tests (each >= ~20 s; ~2,600 s of
@@ -87,9 +90,19 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched = set()
     for item in items:
-        if item.name.split("[")[0] in _SLOW_TESTS:
+        name = item.name.split("[")[0]
+        if name in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(name)
+    # a renamed or deleted slow test leaves its name here, silently
+    # marking nothing; only a collection of every module can tell
+    modules = {p.name for p in pathlib.Path(__file__).parent.glob("test_*.py")}
+    if modules <= {item.path.name for item in items}:
+        for name in sorted(_SLOW_TESTS - matched):
+            warnings.warn(pytest.PytestWarning(
+                f"_SLOW_TESTS name {name!r} matched no collected test"))
 
 
 @pytest.fixture(scope="session")
